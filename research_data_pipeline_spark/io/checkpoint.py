@@ -27,13 +27,26 @@ def compute_or_reuse(
 ) -> DataFrame:
     """Return the checkpointed DataFrame at ``path`` if present, else run
     ``compute``, persist it, and return the re-read (so downstream reads
-    the materialized, statistics-bearing parquet, not the live plan)."""
+    the materialized, statistics-bearing parquet, not the live plan).
+
+    The re-read of a fresh write takes the written schema instead of
+    inferring it from the parquet footers, which costs a Spark job; a
+    reused checkpoint has no schema at hand and infers it. Local
+    checkpoints made while the stage ran (author_statistics makes one)
+    back only the frame just written, so they are released once it
+    commits; DataFrame caches are left to their owners.
+    """
     marker = path.rstrip("/") + "/_SUCCESS"
     if not force and fs.exists(spark, marker):
         return spark.read.parquet(path)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
     df = compute()
     df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    for rdd_id, rdd in jsc.getPersistentRDDs().items():
+        if rdd_id not in before and rdd.isCheckpointed():
+            rdd.unpersist(False)
+    return spark.read.schema(df.schema).parquet(path)
 
 
 def invalidate(path: str, spark: SparkSession | None = None) -> None:

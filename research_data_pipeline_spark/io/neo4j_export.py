@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import os
 import re
+from functools import reduce
 
 # Labels / relationship types become filesystem path segments and are
 # interpolated into the generated neo4j-admin command line, so they must
@@ -111,12 +112,16 @@ def _write_text(path: str, content: str) -> None:
         f.write(content)
 
 
-def _check_unique(df: DataFrame, col: str, what: str) -> None:
-    stats = df.agg(
+def _unique_aggs(col: str) -> list:
+    """The aggregates :func:`_check_unique` reads, to fold into a query."""
+    return [
         F.count(col).alias("n"),
         F.count_distinct(F.col(col)).alias("d"),
         F.sum(F.col(col).isNull().cast("long")).alias("nulls"),
-    ).first()
+    ]
+
+
+def _check_unique(stats, col: str, what: str) -> None:
     if stats["nulls"]:
         raise ValueError(f"{what}: {stats['nulls']} null {col} values")
     if stats["n"] != stats["d"]:
@@ -124,6 +129,23 @@ def _check_unique(df: DataFrame, col: str, what: str) -> None:
             f"{what}: {stats['n'] - stats['d']} duplicate {col} values — "
             "neo4j-admin import aborts on duplicate IDs; dedupe first"
         )
+
+
+def _dangling(edges: DataFrame, ids: DataFrame | None) -> tuple[str, list] | None:
+    """Up to 5 ``src`` endpoints of ``edges`` missing from ``ids`` or, when
+    every ``src`` resolves, up to 5 such ``dst`` endpoints: one anti-join
+    over both endpoints. ``ids`` None means no id resolves."""
+    ends = edges.select(F.inline(F.array(
+        F.struct(F.lit(0).alias("_end"), F.col("src").alias("id")),
+        F.struct(F.lit(1).alias("_end"), F.col("dst").alias("id")),
+    )))
+    if ids is not None:
+        ends = ends.join(ids, "id", "left_anti")
+    rows = ends.orderBy("_end").limit(5).collect()
+    if not rows:
+        return None
+    end = rows[0]["_end"]
+    return ("src", "dst")[end], [r["id"] for r in rows if r["_end"] == end]
 
 
 def export_neo4j_admin(
@@ -143,84 +165,92 @@ def export_neo4j_admin(
     globally unique across ALL labels; src/dst are validated to resolve
     against the vertex set (``validate_refs``) — one broadcast-friendly
     anti-join, because a dangling relationship aborts the real import
-    hours in.
+    hours in. Every check runs before the first file is written.
 
     Returns {"nodes": [labels...], "relationships": [types...]} and
     leaves a ready ``import_command.txt`` under ``base_path``.
     """
     # full-row dedup is the MERGE-idempotency parity; two rows that STILL
     # share an id after it carry conflicting properties — that's a data
-    # error neo4j-admin would abort on, so fail fast here with counts
-    vertices = vertices.dropDuplicates().localCheckpoint()
-    _check_unique(vertices, "id", "vertices")
+    # error neo4j-admin would abort on, so fail fast here with counts.
+    # Both deduped frames are cached once: the checks and every family's
+    # write read them.
+    vertices = vertices.dropDuplicates().persist()
+    edges = edges.dropDuplicates().persist()
+    try:
+        # a NULL label survives collect_set inside its struct
+        stats = vertices.agg(
+            *_unique_aggs("id"), F.collect_set(F.struct("label")).alias("labels")
+        ).first()
+        _check_unique(stats, "id", "vertices")
 
-    if validate_refs:
-        ids = vertices.select("id")
-        for endpoint in ("src", "dst"):
-            dangling = (
-                edges.select(F.col(endpoint).alias("id"))
-                .join(ids, "id", "left_anti")
-                .limit(5)
-                .collect()
-            )
+        if validate_refs:
+            dangling = _dangling(edges, vertices.select("id"))
             if dangling:
-                missing = [r["id"] for r in dangling]
+                endpoint, missing = dangling
                 raise ValueError(
                     f"edges.{endpoint} references missing vertex ids "
                     f"(first {len(missing)}): {missing}"
                 )
 
-    node_props = [c for c in vertices.columns if c not in ("id", "label")]
-    labels = [r["label"] for r in vertices.select("label").distinct().collect()]
-    _check_safe_names(labels, "vertex label")
-    rendered_v = _prep_props(vertices, node_props)
-    for label in sorted(labels):
-        part = rendered_v.where(F.col("label") == label).select(
-            "id", *node_props, "label"
-        )
-        header = ",".join(
-            ["id:ID"]
-            + [f"{p}{_suffix(vertices.schema[p].dataType)}" for p in node_props]
-            + [":LABEL"]
-        )
-        _write_text(f"{base_path}/nodes/{label}/header.csv", header + "\n")
-        _write_headerless_csv(part, f"{base_path}/nodes/{label}/data")
+        labels = [r["label"] for r in stats["labels"]]
+        _check_safe_names(labels, "vertex label")
+        rels = [
+            r[rel_col]
+            for r in edges.agg(F.collect_set(F.struct(rel_col)).alias("rels")).first()["rels"]
+        ]
+        _check_safe_names(rels, "relationship type")
 
-    edge_props = [c for c in edges.columns if c not in ("src", "dst", rel_col)]
-    rels = [r[rel_col] for r in edges.select(rel_col).distinct().collect()]
-    _check_safe_names(rels, "relationship type")
-    rendered_e = _prep_props(edges.dropDuplicates(), edge_props)
-    for rel in sorted(rels):
-        part = rendered_e.where(F.col(rel_col) == rel).select(
-            "src", "dst", *edge_props, F.col(rel_col)
-        )
-        header = ",".join(
-            [":START_ID", ":END_ID"]
-            + [f"{p}{_suffix(edges.schema[p].dataType)}" for p in edge_props]
-            + [":TYPE"]
-        )
-        _write_text(f"{base_path}/relationships/{rel}/header.csv", header + "\n")
-        _write_headerless_csv(part, f"{base_path}/relationships/{rel}/data")
+        node_props = [c for c in vertices.columns if c not in ("id", "label")]
+        rendered_v = _prep_props(vertices, node_props)
+        for label in sorted(labels):
+            part = rendered_v.where(F.col("label") == label).select(
+                "id", *node_props, "label"
+            )
+            header = ",".join(
+                ["id:ID"]
+                + [f"{p}{_suffix(vertices.schema[p].dataType)}" for p in node_props]
+                + [":LABEL"]
+            )
+            _write_text(f"{base_path}/nodes/{label}/header.csv", header + "\n")
+            _write_headerless_csv(part, f"{base_path}/nodes/{label}/data")
 
-    cmd = [f"neo4j-admin database import full {database} \\"]
-    for label in sorted(labels):
+        edge_props = [c for c in edges.columns if c not in ("src", "dst", rel_col)]
+        rendered_e = _prep_props(edges, edge_props)
+        for rel in sorted(rels):
+            part = rendered_e.where(F.col(rel_col) == rel).select(
+                "src", "dst", *edge_props, F.col(rel_col)
+            )
+            header = ",".join(
+                [":START_ID", ":END_ID"]
+                + [f"{p}{_suffix(edges.schema[p].dataType)}" for p in edge_props]
+                + [":TYPE"]
+            )
+            _write_text(f"{base_path}/relationships/{rel}/header.csv", header + "\n")
+            _write_headerless_csv(part, f"{base_path}/relationships/{rel}/data")
+
+        cmd = [f"neo4j-admin database import full {database} \\"]
+        for label in sorted(labels):
+            cmd.append(
+                f"  --nodes=nodes/{label}/header.csv,nodes/{label}/data/part-.* \\"
+            )
+        for rel in sorted(rels):
+            cmd.append(
+                "  --relationships="
+                f"relationships/{rel}/header.csv,relationships/{rel}/data/part-.* \\"
+            )
+        # --multiline-fields: document-style string properties can carry
+        # embedded newlines, which the Spark CSV writer emits RFC-4180-quoted
+        # across physical lines; without this flag neo4j-admin treats them as
+        # truncated records and aborts mid-import.
         cmd.append(
-            f"  --nodes=nodes/{label}/header.csv,nodes/{label}/data/part-.* \\"
+            "  --delimiter=',' --array-delimiter=';' --multiline-fields=true"
         )
-    for rel in sorted(rels):
-        cmd.append(
-            "  --relationships="
-            f"relationships/{rel}/header.csv,relationships/{rel}/data/part-.* \\"
-        )
-    # --multiline-fields: document-style string properties can carry
-    # embedded newlines, which the Spark CSV writer emits RFC-4180-quoted
-    # across physical lines; without this flag neo4j-admin treats them as
-    # truncated records and aborts mid-import.
-    cmd.append(
-        "  --delimiter=',' --array-delimiter=';' --multiline-fields=true"
-    )
-    _write_text(f"{base_path}/import_command.txt", "\n".join(cmd) + "\n")
-    return {"nodes": sorted(labels), "relationships": sorted(rels)}
+        _write_text(f"{base_path}/import_command.txt", "\n".join(cmd) + "\n")
+        return {"nodes": sorted(labels), "relationships": sorted(rels)}
+    finally:
+        vertices.unpersist()
+        edges.unpersist()
 
 
 def _header_cols(header_line: str) -> list[str]:
@@ -288,51 +318,46 @@ def verify_neo4j_export(spark, base_path: str, manifest: dict) -> dict:
     label/type listing — trusting the directory listing instead would
     hide a dropped family)."""
     node_counts: dict[str, int] = {}
-    all_ids = None
+    ids = []
     for label in manifest["nodes"]:
         # FAILFAST: verification must SEE malformed rows, not inherit the
         # ingest path's drop-them tolerance; eqNullSafe: a NULL :LABEL
         # (missing trailing column) is a violation, and `!=` is NULL-blind
         df = read_neo4j_export(spark, base_path, "nodes", label,
                                mode="FAILFAST")
-        bad_label = df.where(
-            ~F.col("label").eqNullSafe(F.lit(label))
-        ).count()
-        if bad_label:
-            raise ValueError(
-                f"nodes/{label}: {bad_label} rows carry a foreign :LABEL"
+        node_counts[label] = _count_foreign(df, "label", label, f"nodes/{label}", ":LABEL")
+        ids.append(df.select("id"))
+    all_ids = reduce(DataFrame.unionByName, ids).persist() if ids else None
+    try:
+        if all_ids is not None:
+            _check_unique(all_ids.agg(*_unique_aggs("id")).first(), "id", "exported nodes")
+        rel_counts: dict[str, int] = {}
+        for rel in manifest["relationships"]:
+            df = read_neo4j_export(spark, base_path, "relationships", rel,
+                                   mode="FAILFAST")
+            rel_counts[rel] = _count_foreign(
+                df, "rel", rel, f"relationships/{rel}", ":TYPE"
             )
-        node_counts[label] = df.count()
-        ids = df.select("id")
-        all_ids = ids if all_ids is None else all_ids.unionByName(ids)
-    if all_ids is not None:
-        all_ids = all_ids.localCheckpoint()
-        _check_unique(all_ids, "id", "exported nodes")
-    rel_counts: dict[str, int] = {}
-    for rel in manifest["relationships"]:
-        df = read_neo4j_export(spark, base_path, "relationships", rel,
-                               mode="FAILFAST")
-        bad_type = df.where(
-            ~F.col("rel").eqNullSafe(F.lit(rel))
-        ).count()
-        if bad_type:
-            raise ValueError(
-                f"relationships/{rel}: {bad_type} rows carry a foreign :TYPE"
-            )
-        rel_counts[rel] = df.count()
-        for endpoint in ("src", "dst"):
-            dangling = (
-                df.select(F.col(endpoint).alias("id"))
-                .join(all_ids, "id", "left_anti")
-                .limit(5)
-                .collect()
-                if all_ids is not None
-                else df.select(endpoint).limit(5).collect()
-            )
+            dangling = _dangling(df, all_ids)
             if dangling:
-                missing = [r[0] for r in dangling]
+                endpoint, missing = dangling
                 raise ValueError(
                     f"exported relationships/{rel}.{endpoint} references "
                     f"missing node ids (first {len(missing)}): {missing}"
                 )
+    finally:
+        if all_ids is not None:
+            all_ids.unpersist()
     return {"nodes": node_counts, "relationships": rel_counts}
+
+
+def _count_foreign(df: DataFrame, col: str, name: str, family: str, marker: str) -> int:
+    """Row count of one exported family, in the same aggregation as the
+    check that every row's ``col`` is ``name``."""
+    stats = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.when(~F.col(col).eqNullSafe(F.lit(name)), 1)).alias("foreign"),
+    ).first()
+    if stats["foreign"]:
+        raise ValueError(f"{family}: {stats['foreign']} rows carry a foreign {marker}")
+    return stats["n"]

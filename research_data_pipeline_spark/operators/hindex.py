@@ -17,14 +17,14 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 
-def hindex(
+def hindex_ranked(
     df: DataFrame,
     group_cols: list[str],
     metric: Column,
     tiebreak: list[Column] | None = None,
-    out_col: str = "hindex",
 ) -> DataFrame:
-    """Per-group h-index of ``metric`` (h = max h s.t. h rows have metric ≥ h).
+    """``df`` plus ``_rn``, each row's position within its group by
+    ``metric`` descending — the window :func:`hindex_col` aggregates.
 
     ``tiebreak`` makes row_number deterministic; the h-index value itself
     is tie-invariant (metric is sorted descending), determinism just keeps
@@ -32,11 +32,26 @@ def hindex(
     """
     order = [metric.desc()] + [c.asc() for c in (tiebreak or [])]
     w = W.partitionBy(*group_cols).orderBy(*order)
-    ranked = df.withColumn("_rn", F.row_number().over(w))
-    return ranked.groupBy(*group_cols).agg(
-        F.coalesce(
-            F.max(F.when(metric >= F.col("_rn"), F.col("_rn"))), F.lit(0)
-        )
-        .cast("bigint")
-        .alias(out_col)
+    return df.withColumn("_rn", F.row_number().over(w))
+
+
+def hindex_col(metric: Column) -> Column:
+    """The h-index aggregate over :func:`hindex_ranked` rows: the largest
+    ``_rn`` whose metric is still ≥ ``_rn`` (0 when none is). Other
+    aggregates grouped by the same columns share its exchange."""
+    return F.coalesce(
+        F.max(F.when(metric >= F.col("_rn"), F.col("_rn"))), F.lit(0)
+    ).cast("bigint")
+
+
+def hindex(
+    df: DataFrame,
+    group_cols: list[str],
+    metric: Column,
+    tiebreak: list[Column] | None = None,
+    out_col: str = "hindex",
+) -> DataFrame:
+    """Per-group h-index of ``metric`` (h = max h s.t. h rows have metric ≥ h)."""
+    return hindex_ranked(df, group_cols, metric, tiebreak).groupBy(*group_cols).agg(
+        hindex_col(metric).alias(out_col)
     )

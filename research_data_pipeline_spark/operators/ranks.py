@@ -18,13 +18,17 @@ scale. Both ranks here instead:
    bounded by cardinality of the metric, not row count),
 3. hash-join the (value → rank) map back onto the input.
 
-Rank depends only on the metric value, so this is exact, and the single-
-partition stage now touches |distinct values| rows instead of |rows|.
+Rank depends only on the metric value, so this is exact, and the window
+stage now touches |distinct values| rows instead of |rows|. Several
+metrics of one table share a single pass (``pandas_int_ranks``): one
+aggregation, one window and one join per metric.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -40,62 +44,137 @@ RANK_WINDOW_MAX_DISTINCT = 65_536
 
 def _value_ranks(
     df: DataFrame,
-    metric: str,
+    metrics: str | list[str],
     ascending: bool,
     max_window_distinct: int = RANK_WINDOW_MAX_DISTINCT,
     distinct_hint: int | None = None,
 ) -> DataFrame:
-    """One row per distinct metric value with its min rank and tie count.
+    """One row per (metric, distinct value) with its min rank and tie count.
+
+    All ``metrics`` are ranked in one pass: each input row is stacked into
+    one row per metric, ``_m`` (the metric's position) plus one column per
+    metric, only metric ``_m``'s set. One aggregation then yields every
+    value histogram, and one window partitioned by ``_m`` ranks them; the
+    unset columns are constant within a partition, so ordering by all
+    metrics orders by metric ``_m``. Metric ``i`` is counted over the rows
+    whose earlier metrics are all non-NULL: ranking metric by metric with
+    an inner join each drops exactly those rows before metric ``i``.
 
     Cardinality-guarded: estimates |distinct(metric)| with one cheap
     partial-aggregate pass; below the guard the cumulative window runs
-    over the distinct values in one (small) partition, above it the
-    prefix sum is computed range-partitioned — local cumsum within each
-    range, plus a |partitions|-sized offset map — so no single-partition
-    window exists at any cardinality (same shape as
+    over the distinct values, one (small) partition per metric; above it
+    the prefix sum is computed range-partitioned — local cumsum within
+    each range, plus a |partitions × metrics|-sized offset map — so no
+    single-partition window exists at any cardinality (same shape as
     ``scalable_prefix_sum``).
     """
-    order = F.col(metric).asc() if ascending else F.col(metric).desc()
-    hist = df.groupBy(metric).agg(F.count(F.lit(1)).alias("_ties"))
+    metrics = [metrics] if isinstance(metrics, str) else list(metrics)
+    types = [df.schema[m].dataType for m in metrics]
+    rows = []
+    for i in range(len(metrics)):
+        row = F.struct(
+            F.lit(i).alias("_m"),
+            *[
+                (F.col(m) if j == i else F.lit(None).cast(t)).alias(m)
+                for j, (m, t) in enumerate(zip(metrics, types))
+            ],
+        )
+        earlier = [F.col(m).isNotNull() for m in metrics[:i]]
+        if earlier:
+            row = F.when(reduce(lambda a, b: a & b, earlier), row)
+        rows.append(row)
+    stacked = df.select(F.inline(F.filter(F.array(*rows), lambda r: r.isNotNull())))
+    order = [F.col(m).asc() if ascending else F.col(m).desc() for m in metrics]
+    hist = stacked.groupBy("_m", *metrics).agg(F.count(F.lit(1)).alias("_ties"))
     if distinct_hint is not None:
         n_distinct = distinct_hint
     else:
-        n_distinct = df.agg(F.approx_count_distinct(metric).alias("d")).first()["d"]
+        n_distinct = max(df.agg(*[F.approx_count_distinct(m) for m in metrics]).first())
     if n_distinct <= max_window_distinct:
-        # single-partition window BY DESIGN: hist is bounded
-        # <= max_window_distinct by the cardinality guard above
-        w_before = W.orderBy(order).rowsBetween(W.unboundedPreceding, -1)
-        return hist.withColumn(
-            "_min_rank", F.coalesce(F.sum("_ties").over(w_before), F.lit(0)) + 1
+        # partitioned by metric only BY DESIGN: each partition is bounded
+        # <= max_window_distinct by the cardinality guard above, which
+        # also bounds the value map a caller broadcasts back to the rows
+        w_before = W.partitionBy("_m").orderBy(*order).rowsBetween(
+            W.unboundedPreceding, -1
         )
+        return F.broadcast(hist.withColumn(
+            "_min_rank", F.coalesce(F.sum("_ties").over(w_before), F.lit(0)) + 1
+        ))
     sc = df.sparkSession.sparkContext
     n_parts = sc.defaultParallelism
-    part = hist.repartitionByRange(n_parts, order).withColumn(
+    part = hist.repartitionByRange(n_parts, F.col("_m"), *order).withColumn(
         "_pid", F.spark_partition_id()
     )
     w_local = (
-        W.partitionBy("_pid")
-        .orderBy(order)
+        W.partitionBy("_pid", "_m")
+        .orderBy(*order)
         .rowsBetween(W.unboundedPreceding, -1)
     )
     local = part.withColumn(
         "_before", F.coalesce(F.sum("_ties").over(w_local), F.lit(0))
     ).localCheckpoint()
     totals = {
-        r["_pid"]: r["_tot"]
-        for r in local.groupBy("_pid").agg(F.sum("_ties").alias("_tot")).collect()
+        (r["_m"], r["_pid"]): r["_tot"]
+        for r in local.groupBy("_m", "_pid").agg(F.sum("_ties").alias("_tot")).collect()
     }
-    offsets, run = {}, 0
-    for pid in sorted(totals):
-        offsets[pid] = run
-        run += totals[pid] or 0
+    offsets, run = {}, {}
+    for m, pid in sorted(totals):
+        offsets[pid * len(metrics) + m] = run.get(m, 0)
+        run[m] = run.get(m, 0) + (totals[(m, pid)] or 0)
     omap = F.create_map(
-        *[lit for pid, off in offsets.items() for lit in (F.lit(pid), F.lit(off))]
+        *[lit for key, off in offsets.items() for lit in (F.lit(key), F.lit(off))]
     )
+    key = F.col("_pid") * len(metrics) + F.col("_m")
     return local.withColumn(
         "_min_rank",
-        F.col("_before") + F.coalesce(omap[F.col("_pid")], F.lit(0)) + 1,
+        F.col("_before") + F.coalesce(omap[key], F.lit(0)) + 1,
     ).drop("_pid", "_before")
+
+
+def _join_ranks(
+    df: DataFrame,
+    ranked: dict[str, str],
+    rank: Column,
+    ascending: bool,
+    distinct_hint: int | None,
+) -> DataFrame:
+    """Attach ``rank`` (over ``_min_rank``/``_ties``) of each metric as
+    column ``ranked[metric]``, one inner join per metric. The value maps
+    come from one ``_value_ranks`` pass; a metric's map rows carry NULL in
+    every other metric's column, so an equi-join on that metric picks out
+    exactly its own rows without a filter, and every join reuses the same
+    exchanges."""
+    metrics = list(ranked)
+    values = _value_ranks(df, metrics, ascending, distinct_hint=distinct_hint).select(
+        *metrics, rank.cast("bigint").alias("_rank")
+    )
+    for metric, out_col in ranked.items():
+        df = df.join(values.select(metric, F.col("_rank").alias(out_col)), on=metric)
+    return df
+
+
+def pandas_int_ranks(
+    df: DataFrame,
+    ranked: dict[str, str],
+    ascending: bool = False,
+    distinct_hint: int | None = None,
+) -> DataFrame:
+    """pandas average-rank truncated to int, descending by default, of
+    every metric in ``ranked`` (metric → output column), in one pass.
+
+    avg rank of a tie group = min_rank + (ties-1)/2; int() truncates →
+    floor((2·min_rank + ties − 1)/2).
+
+    Same result as calling :func:`pandas_int_rank` once per metric in
+    ``ranked`` order: a row with a NULL metric drops out, and the metrics
+    after it are ranked without that row.
+
+    ``distinct_hint``: callers that KNOW every metric is dictionary-sized
+    (small-integer counts like total_pubs) pass a bound to skip the
+    cardinality-estimate job the guard otherwise runs.
+    """
+    rank = F.floor((2 * F.col("_min_rank") + F.col("_ties") - 1) / 2.0)
+    return _join_ranks(df, ranked, rank, ascending, distinct_hint)
 
 
 def pandas_int_rank(
@@ -105,22 +184,8 @@ def pandas_int_rank(
     ascending: bool = False,
     distinct_hint: int | None = None,
 ) -> DataFrame:
-    """pandas average-rank truncated to int, descending by default.
-
-    avg rank of a tie group = min_rank + (ties-1)/2; int() truncates →
-    floor((2·min_rank + ties − 1)/2).
-
-    ``distinct_hint``: callers that KNOW the metric is dictionary-sized
-    (small-integer counts like total_pubs) pass a bound to skip the
-    cardinality-estimate job the guard otherwise runs.
-    """
-    ranks = _value_ranks(df, metric, ascending, distinct_hint=distinct_hint).select(
-        metric,
-        F.floor((2 * F.col("_min_rank") + F.col("_ties") - 1) / 2.0)
-        .cast("bigint")
-        .alias(out_col),
-    )
-    return df.join(ranks, on=metric)
+    """:func:`pandas_int_ranks` of one metric."""
+    return pandas_int_ranks(df, {metric: out_col}, ascending, distinct_hint)
 
 
 def spark_rank(
@@ -131,11 +196,8 @@ def spark_rank(
     distinct_hint: int | None = None,
 ) -> DataFrame:
     """Plain SQL rank() (ties share min rank) — the idiomatic rank, same
-    two-phase plan. ``distinct_hint`` as in ``pandas_int_rank``."""
-    ranks = _value_ranks(df, metric, ascending, distinct_hint=distinct_hint).select(
-        metric, F.col("_min_rank").cast("bigint").alias(out_col)
-    )
-    return df.join(ranks, on=metric)
+    two-phase plan. ``distinct_hint`` as in ``pandas_int_ranks``."""
+    return _join_ranks(df, {metric: out_col}, F.col("_min_rank"), ascending, distinct_hint)
 
 
 def scalable_prefix_sum(

@@ -3,14 +3,23 @@ single biggest pathology.
 
 final_tables.py:125-170 computes per-author stats with a Python loop that
 re-scans the whole authorship table per author (O(authors × authorship),
-"NB! Slow run..." in the source). Here the same statistics are three
-declarative aggregations sharing one hash-partitioning on author_id:
+"NB! Slow run..." in the source). Here the same statistics are two
+declarative aggregations on author_id:
 
-- totals/averages/medians: one groupBy over the authorship⋈article fact;
-- h-index: the window formulation (operators.hindex) — no UDAF;
-- unique co-authors: the two-hop self-join distinct (J6+A5);
-- ranks: pandas-parity int ranks over the finished (dimension-sized)
-  author table.
+- totals, medians and the h-index: one window (operators.hindex) plus
+  one groupBy over the authorship⋈article fact — the groupBy reuses the
+  window's author_id partitioning, no UDAF;
+- unique co-authors: the two-hop self-join, one set per author (J6+A5);
+- ranks: pandas-parity int ranks of all four metrics in one pass
+  (operators.ranks.pandas_int_ranks) over the finished author table.
+
+The finished table is materialized once before it is ranked. Ranking
+reads it once per metric plus once for the value histograms; without
+the materialization each read would re-run the statistics, and inside
+``transforms.pipeline.run_pipeline`` everything upstream of them back to
+the raw JSON scan, so the plan would carry that lineage five times. The
+materialized table is dimension-sized (one row per author), not
+fact-sized.
 
 At 100 TB the only shuffles are on author_id / article_id; ranks run on
 the aggregated dimension, never the fact.
@@ -21,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.hindex import hindex
-from ..operators.ranks import RANK_WINDOW_MAX_DISTINCT, pandas_int_rank
+from ..operators.hindex import hindex_col, hindex_ranked
+from ..operators.ranks import RANK_WINDOW_MAX_DISTINCT, pandas_int_ranks
 
 
 def author_statistics(
@@ -30,6 +39,9 @@ def author_statistics(
 ) -> DataFrame:
     """Attach total_pubs, total_cites, avg_cites, med_coauthors,
     n_unique_coauthors, hindex and the four rank_* columns.
+
+    Runs the statistics eagerly into a local checkpoint (see the module
+    docstring); the ranks and the returned frame are lazy over it.
 
     Parity notes (final_tables.py:125-170):
     - the npubs merge is INNER (:127) → authors without publications in
@@ -41,7 +53,8 @@ def author_statistics(
     - n_unique_coauthors counts distinct authors across the author's
       articles minus self (:148-150);
     - ranks are pandas ``rank(ascending=0).astype(int)`` (:161-164) →
-      pandas_int_rank;
+      pandas_int_ranks; an author with a NULL total_cites (no article
+      with a citation count) has no rank and drops out;
     - total_cites/hindex cast to int at the end (:168-170).
     """
     facts = authorship.join(
@@ -50,20 +63,17 @@ def author_statistics(
         ),
         "article_id",
     )
-
-    base = facts.groupBy("author_id").agg(
-        F.count(F.lit(1)).alias("total_pubs"),
-        F.sum("_cites").cast("long").alias("total_cites"),
-        F.median(F.col("n_authors") - 1).alias("med_coauthors"),
-    ).withColumn(
-        "avg_cites", F.round(F.col("total_cites") / F.col("total_pubs"), 3)
-    )
-
-    hidx = hindex(
-        facts,
-        group_cols=["author_id"],
-        metric=F.col("_cites"),
-        tiebreak=[F.col("article_id")],
+    cites = F.col("_cites")
+    base = (
+        hindex_ranked(facts, ["author_id"], cites, tiebreak=[F.col("article_id")])
+        .groupBy("author_id")
+        .agg(
+            F.count(F.lit(1)).alias("total_pubs"),
+            F.sum(cites).cast("long").alias("total_cites"),
+            F.median(F.col("n_authors") - 1).alias("med_coauthors"),
+            hindex_col(cites).alias("hindex"),
+        )
+        .withColumn("avg_cites", F.round(F.col("total_cites") / F.col("total_pubs"), 3))
     )
 
     a = authorship.select(F.col("author_id").alias("_me"), "article_id")
@@ -71,29 +81,30 @@ def author_statistics(
     coauth = (
         a.join(b, "article_id")
         .groupBy(F.col("_me").alias("author_id"))
-        .agg((F.countDistinct("_other") - 1).cast("long").alias("n_unique_coauthors"))
+        # a set per author, not countDistinct: one exchange on author_id
+        # instead of a second one on (author, co-author) pairs
+        .agg((F.size(F.collect_set("_other")) - 1).cast("long").alias("n_unique_coauthors"))
     )
 
     enriched = (
         author.join(base, "author_id")  # inner: npubs merge parity
-        .join(hidx, "author_id")
         .join(coauth, "author_id")
+        .localCheckpoint()
     )
-
-    for metric, col in [
-        ("total_pubs", "rank_total_pubs"),
-        ("total_cites", "rank_total_cites"),
-        ("avg_cites", "rank_avg_cites"),
-        ("hindex", "rank_hindex"),
-    ]:
+    ranked = pandas_int_ranks(
+        enriched,
+        {
+            "total_pubs": "rank_total_pubs",
+            "total_cites": "rank_total_cites",
+            "avg_cites": "rank_avg_cites",
+            "hindex": "rank_hindex",
+        },
         # count-valued metrics on a dimension-sized table: dictionary
         # cardinality is known, skip the guard's estimate job
-        enriched = pandas_int_rank(
-            enriched, metric=metric, out_col=col,
-            distinct_hint=RANK_WINDOW_MAX_DISTINCT,
-        )
+        distinct_hint=RANK_WINDOW_MAX_DISTINCT,
+    )
 
-    return enriched.select(
+    return ranked.select(
         "author_id",
         "last_name",
         "first_name",

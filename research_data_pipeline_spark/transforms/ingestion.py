@@ -29,6 +29,11 @@ def clean_raw(spark: SparkSession, raw_path: str) -> DataFrame:
     wildcard, so "ics.XX" or "physics" both match `cs.` — load-bearing
     reference behavior, reproduced with ``rlike`` (not a literal match).
     """
+    from ..session import apply_runtime_confs
+
+    apply_runtime_confs(spark)  # AQE partition coalescing; a foreign
+    # session's static 200 shuffle partitions otherwise drown small dims
+    # in task/Python-worker overhead
     raw = read_jsonl(spark, raw_path, ARXIV_RAW_SCHEMA).withColumn(
         "_seq", F.monotonically_increasing_id()
     )
@@ -148,20 +153,14 @@ def remove_bad_authors(
     return article_clean, authorship_clean, author_clean
 
 
-def extract_tables(spark: SparkSession, raw_path: str) -> dict[str, DataFrame]:
-    """Full ingestion: raw JSON-lines → the 5 pre-augmentation tables
+def tables_from_clean(clean: DataFrame) -> dict[str, DataFrame]:
+    """The 5 pre-augmentation tables from :func:`clean_raw`'s output
     (journal starts empty and is derived post-augmentation).
 
-    One logical plan end-to-end — Catalyst pushes the projection into the
-    JSON scan and runs the filters before the explodes, which is the
-    whole raw_to_tables.py program without a single driver-side loop.
+    Every table is computed from ``clean``: a caller materializing several
+    of them separately caches ``clean`` first, or each pays its own raw
+    scan.
     """
-    from ..session import apply_runtime_confs
-
-    apply_runtime_confs(spark)  # AQE partition coalescing; a foreign
-    # session's static 200 shuffle partitions otherwise drown small dims
-    # in task/Python-worker overhead
-    clean = clean_raw(spark, raw_path).cache()
     authorship, author = authorship_author_tables(clean)
     article_category, category = article_category_tables(clean)
     article = article_table(clean)
@@ -176,3 +175,15 @@ def extract_tables(spark: SparkSession, raw_path: str) -> dict[str, DataFrame]:
         "article_category": article_category,
         "category": category,
     }
+
+
+def extract_tables(spark: SparkSession, raw_path: str) -> dict[str, DataFrame]:
+    """Full ingestion: raw JSON-lines → the 5 pre-augmentation tables,
+    sharing one cached raw scan (never released: the tables stay lazy
+    over it).
+
+    One logical plan end-to-end — Catalyst pushes the projection into the
+    JSON scan and runs the filters before the explodes, which is the
+    whole raw_to_tables.py program without a single driver-side loop.
+    """
+    return tables_from_clean(clean_raw(spark, raw_path).cache())

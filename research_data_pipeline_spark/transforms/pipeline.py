@@ -21,7 +21,7 @@ from .augment import (
     journal_from_articles,
 )
 from .author_stats import author_statistics
-from .ingestion import extract_tables
+from .ingestion import clean_raw, extract_tables, tables_from_clean
 from ..operators.dedup_relational import deterministic_dedup
 
 
@@ -63,11 +63,7 @@ def run_pipeline(
 
     # author_ready (final_tables.py:106-175): dedup, restrict to authors
     # present in authorship, gender augment, then the statistics job
-    author_dim = deterministic_dedup(
-        t["author"].dropDuplicates(),
-        keys=["author_id"],
-        order_by=[F.col("last_name"), F.col("first_name"), F.col("middle_name")],
-    ).join(authorship.select("author_id"), "author_id", "left_semi")
+    author_dim = _author_dim(t["author"], authorship)
     author = author_statistics(add_gender(author_dim, names_genders), authorship, article)
 
     # article_category_ready / category_ready (final_tables.py:178-203)
@@ -86,6 +82,18 @@ def run_pipeline(
         "article_category": article_category,
         "category": category,
     }
+
+
+def _author_dim(author: DataFrame, authorship: DataFrame) -> DataFrame:
+    """One row per author_id, the first by name (final_tables.py:113),
+    restricted to authors present in ``authorship``. ``author`` carries
+    only the key and the three ordering columns, so a full-row dedup
+    first would change nothing."""
+    return deterministic_dedup(
+        author,
+        keys=["author_id"],
+        order_by=[F.col("last_name"), F.col("first_name"), F.col("middle_name")],
+    ).join(authorship.select("author_id"), "author_id", "left_semi")
 
 
 def run_pipeline_checkpointed(
@@ -108,17 +116,28 @@ def run_pipeline_checkpointed(
     raw scan), enrichment (external API — the hours-long stage), and the
     final consistency-filtered tables. Cheap derivations between
     checkpoints stay lazy.
+
+    The five ``raw_*`` stages share one cached scan of the raw JSON,
+    released once they are committed; the author stage's local
+    checkpoint is released by ``compute_or_reuse`` when it commits. Every
+    returned table reads its checkpoint, so the call leaves nothing
+    cached behind.
     """
     from ..io.checkpoint import compute_or_reuse
 
     def _ck(name: str, compute) -> DataFrame:
         return compute_or_reuse(spark, f"{ckpt_dir}/{name}", compute)
 
-    t = {
-        name: _ck(f"raw_{name}", lambda n=name: extract_tables(spark, raw_path)[n])
-        for name in ("article", "authorship", "author", "article_category",
-                     "category")
-    }
+    clean = clean_raw(spark, raw_path).cache()
+    try:
+        raw = tables_from_clean(clean)
+        t = {
+            name: _ck(f"raw_{name}", lambda n=name: raw[n])
+            for name in ("article", "authorship", "author", "article_category",
+                         "category")
+        }
+    finally:
+        clean.unpersist()
     enriched = _ck(
         "enriched",
         lambda: filter_journal_articles(enrich_articles(t["article"], fetcher)),
@@ -139,15 +158,7 @@ def run_pipeline_checkpointed(
     author = _ck(
         "author",
         lambda: author_statistics(
-            add_gender(
-                deterministic_dedup(
-                    t["author"].dropDuplicates(),
-                    keys=["author_id"],
-                    order_by=[F.col("last_name"), F.col("first_name"),
-                              F.col("middle_name")],
-                ).join(authorship.select("author_id"), "author_id", "left_semi"),
-                names_genders,
-            ),
+            add_gender(_author_dim(t["author"], authorship), names_genders),
             authorship,
             article,
         ),

@@ -1,6 +1,30 @@
 from __future__ import annotations
 
+import contextlib
+import uuid
+
 import pytest
+
+
+@contextlib.contextmanager
+def count_jobs(spark):
+    """Collects into the yielded list the ids of the Spark jobs this
+    thread submits inside the block: the block runs under its own job
+    group, read back from the status tracker on exit (once the listener
+    bus has delivered the block's job events to it)."""
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    jobs: list[int] = []
+    try:
+        yield jobs
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -32,6 +32,21 @@ def test_compute_or_reuse_runs_once_then_reads_back(spark, tmp_path):
     assert calls["n"] == 3
 
 
+def test_compute_or_reuse_reads_back_the_written_schema(spark, tmp_path):
+    """A fresh checkpoint is re-read with the schema it was written with:
+    no footer-inference job after the write, and the same schema (all
+    nullable, as parquet reads it) as an inferring read."""
+    from .conftest import count_jobs
+
+    df = spark.range(5).selectExpr("id", "cast(id as string) s", "array(id) a")
+    path = str(tmp_path / "ckpt")
+    with count_jobs(spark) as jobs:
+        back = compute_or_reuse(spark, path, lambda: df)
+    assert len(jobs) == 1  # the write
+    assert back.schema == spark.read.parquet(path).schema
+    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
+
+
 def _articles(spark):
     rows = [(f"d{i}", None, None, None) for i in range(10)]
     rows += [("x0", "journal-article", "7", "1111-1111")]

@@ -25,16 +25,22 @@ def raw_path(tmp_path_factory):
     return str(p)
 
 
-@pytest.fixture(scope="session")
-def pipeline_tables(spark, raw_path):
+def _lookups(spark):
     names_genders = spark.createDataFrame(
-        names_genders_rows(), "first_name string, alph_value string, gender string, prob string"
+        names_genders_rows(),
+        "first_name string, alph_value string, gender string, prob string",
     )
     cwts = spark.createDataFrame(
         cwts_rows(),
-        "source_title string, print_issn string, electronic_issn string, snip double, year int",
+        "source_title string, print_issn string, electronic_issn string, "
+        "snip double, year int",
     ).where(F.col("year") == 2021)
-    tables = run_pipeline(spark, raw_path, names_genders, cwts, fake_fetcher)
+    return names_genders, cwts
+
+
+@pytest.fixture(scope="session")
+def pipeline_tables(spark, raw_path):
+    tables = run_pipeline(spark, raw_path, *_lookups(spark), fake_fetcher)
     return {k: v.cache() for k, v in tables.items()}
 
 
@@ -323,6 +329,52 @@ def test_quality_report_counts_violations_on_dirty_data(spark):
     assert out[("c", "fk_fk_to_p")] == 2      # fk 9 and 8 orphaned
 
 
+def test_star_schema_checks_on_dirty_data_in_one_query(spark):
+    """Every check's exact verdict on a schema violating each of them —
+    duplicate and NULL keys, NULL required columns, orphans counted per
+    child row, NULL child keys exempt — from one query's few jobs."""
+    from research_data_pipeline_spark.quality import CheckResult
+
+    from .conftest import count_jobs
+
+    def frame(rows, schema):
+        return spark.createDataFrame(rows, schema)
+
+    tables = {
+        "article": frame(
+            [("a1", "title one", "j1"), ("a1", "title two", "j1"),
+             (None, "title three", "j9"), ("a3", None, None)],
+            "article_id string, title string, journal_issn string",
+        ),
+        "author": frame([("u1",), ("u1",), ("u2",)], "author_id string"),
+        "journal": frame([("j1",)], "journal_issn string"),
+        "category": frame([("c1",), (None,)], "category_id string"),
+        "authorship": frame(
+            [("a1", "u1"), ("a1", "u1"), ("a9", "u1"), ("a1", "u9"), (None, "u2")],
+            "article_id string, author_id string",
+        ),
+        "article_category": frame(
+            [("a1", "c1"), ("a8", "c7"), ("a8", "c7")],
+            "article_id string, category_id string",
+        ),
+    }
+    with count_jobs(spark) as jobs:
+        got = run_star_schema_checks(tables)
+    assert got == [
+        CheckResult("article.pk", False, "rows=4 distinct=2"),
+        CheckResult("author.pk", False, "rows=3 distinct=2"),
+        CheckResult("journal.pk", True, "rows=1 distinct=1"),
+        CheckResult("category.pk", False, "rows=2 distinct=1"),
+        CheckResult("article.notnull", False, "nulls={'article_id': 1, 'title': 1}"),
+        CheckResult("fk(article_id->article_id)", False, "orphans=1"),
+        CheckResult("fk(author_id->author_id)", False, "orphans=1"),
+        CheckResult("fk(article_id->article_id)", False, "orphans=2"),
+        CheckResult("fk(category_id->category_id)", False, "orphans=2"),
+        CheckResult("fk(journal_issn->journal_issn)", False, "orphans=1"),
+    ]
+    assert len(jobs) <= 5, len(jobs)
+
+
 def test_checkpointed_pipeline_resumes_after_crash(spark, raw_path, tmp_path):
     """Stage-checkpointed pipeline: a crash during enrichment reruns ONLY
     the missing stages — the ingest checkpoints survive and the fetch is
@@ -333,17 +385,8 @@ def test_checkpointed_pipeline_resumes_after_crash(spark, raw_path, tmp_path):
         run_pipeline,
         run_pipeline_checkpointed,
     )
-    from .fixtures import fake_fetcher
 
-    names_genders = spark.createDataFrame(
-        names_genders_rows(),
-        "first_name string, alph_value string, gender string, prob string",
-    )
-    cwts = spark.createDataFrame(
-        cwts_rows(),
-        "source_title string, print_issn string, electronic_issn string, "
-        "snip double, year int",
-    ).where(F.col("year") == 2021)
+    names_genders, cwts = _lookups(spark)
     ckpt = str(tmp_path / "ckpt")
     log = tmp_path / "fetchlog"
     log.mkdir()
@@ -377,7 +420,55 @@ def test_checkpointed_pipeline_resumes_after_crash(spark, raw_path, tmp_path):
     )
     assert len(os.listdir(log_dir)) == fetches_first_complete
     plain = run_pipeline(spark, raw_path, names_genders, cwts, fake_fetcher)
-    for name in ("article", "journal", "authorship", "author"):
-        assert sorted(map(tuple, out2[name].collect())) == sorted(
-            map(tuple, plain[name].collect())
+    for name in ("article", "journal", "authorship", "author", "article_category",
+                 "category"):
+        assert out2[name].columns == plain[name].columns, name
+        # key=str: category.subdom holds NULLs, which tuples cannot order
+        assert sorted(map(tuple, out2[name].collect()), key=str) == sorted(
+            map(tuple, plain[name].collect()), key=str
         ), name
+
+
+def test_checkpointed_pipeline_leaves_nothing_persisted(spark, tmp_path):
+    """The shared raw scan and the author table's local checkpoint are
+    released once their stages commit: no RDD the call persisted
+    outlives it (its own raw file, so no earlier test's cache of the same
+    scan can stand in for it)."""
+    from research_data_pipeline_spark.transforms.pipeline import (
+        run_pipeline_checkpointed,
+    )
+
+    raw = str(tmp_path / "arxiv_raw.jsonl")
+    write_arxiv_raw(raw)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    out = run_pipeline_checkpointed(
+        spark, raw, *_lookups(spark), fake_fetcher, str(tmp_path / "ckpt")
+    )
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+    assert out["author"].count() > 0
+
+
+def test_author_statistics_job_budget(spark, pipeline_tables):
+    """All four ranks come from one pass over the materialized author
+    table: a bounded number of Spark jobs, not one chain per rank."""
+    from research_data_pipeline_spark.transforms.author_stats import author_statistics
+
+    from .conftest import count_jobs
+
+    t = pipeline_tables
+    author = t["author"].select(
+        "author_id", "last_name", "first_name", "middle_name", "gender"
+    )
+    with count_jobs(spark) as jobs:
+        out = author_statistics(author, t["authorship"], t["article"])
+        out.write.format("noop").mode("overwrite").save()
+    assert len(jobs) <= 20, len(jobs)
+
+
+def test_fused_author_plan_stays_small(spark, raw_path):
+    """The fused pipeline's author table is planned over the materialized
+    statistics, not over copies of the lineage back to the raw JSON."""
+    plan = run_pipeline(spark, raw_path, *_lookups(spark), fake_fetcher)["author"]
+    size = len(plan._jdf.queryExecution().optimizedPlan().toString())
+    assert size <= 100_000, size
